@@ -28,11 +28,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // an Int, so the JSON lines and the file names below stay well-formed
+    // whatever the variable holds (`*`, empty, unset)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+      .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -159,7 +162,11 @@ object Bench {
     //     survive any tail window, so a log-tail parser always sees one
     //     complete JSON object.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
-    val perCpuFile = s"bench_latest_c$cpus.json"
+    // one file per shard too: shards of one sweep must not overwrite
+    // each other's per-query table
+    val perCpuFile = shard.fold(s"bench_latest_c$cpus.json") {
+      case (i, n) => s"bench_latest_c${cpus}_s${i}of$n.json"
+    }
     for (f <- Seq(outFile, perCpuFile).distinct)
       try java.nio.file.Files.write(java.nio.file.Paths.get(f),
         (line + "\n").getBytes("UTF-8"))

@@ -865,28 +865,92 @@ object DedupOps {
 
   /** Distributed connected components over an undirected pair list —
     * the reusable core of [[dedupClusters]]. `vertices` has one `doc_id`
-    * column; `pairs` has (`doc_a`, `doc_b`). Output: (doc_id,
-    * cluster_id) with cluster_id = the component's minimum doc_id.
+    * column; `pairs` has (`doc_a`, `doc_b`); ids are bigint. Output:
+    * (doc_id, cluster_id) with cluster_id = the component's minimum
+    * doc_id.
     *
-    * `checkpointDir`: when set, every per-round materialization is a
-    * RELIABLE checkpoint into that directory (HDFS/object store on a
-    * cluster) instead of `localCheckpoint` — localCheckpoint blocks live
-    * on executors and die with them, so a multi-hour 100 TB CC job would
-    * be killed by its first lost executor; the reliable path re-reads
-    * the checkpoint files instead. Identical results (spec-asserted);
-    * the local default stays the fast single-process choice. */
+    * Two phases. First a LOCAL SEED: each partition of the symmetric
+    * edge checkpoint runs an in-memory union-find ([[localMinLabels]])
+    * and labels every endpoint with the minimum id of its partition-local
+    * component; one `min` aggregation per vertex merges the partitions'
+    * labels. Then the distributed rounds (neighbor-min + pointer jump
+    * over the frontier) finish the job over the contracted graph.
+    *
+    * Why the seed is exact: each seed label is the minimum of a
+    * connected set of touched vertices that contains the vertex, so it
+    * is an id of the vertex's own component, no larger than the vertex
+    * itself and no smaller than the component minimum — the invariant
+    * the rounds rely on. The rounds only ever lower labels towards
+    * neighbor minima, so they reach the
+    * same component minima (oracle-replayed, spec-checked against a
+    * plain union-find). A set minimum does not depend on row order, so
+    * a retried task emits the same seed.
+    *
+    * Cost: edges are partitioned by `dst`, so every partition holds
+    * whole `dst` neighbourhoods and the seed is worth at least one
+    * neighbor-min round at any partition count; a graph whose edges fit
+    * one partition (the sf0.1 corpora after AQE coalescing) is closed
+    * outright, and the loop runs only its no-change fixpoint probe. At
+    * P partitions the remaining rounds are O(log diameter) of the
+    * contracted graph when ids grow along its paths (the chain spec);
+    * with ids shuffled along a long path a new minimum can still crawl
+    * about one hop per round (random 16-partition graphs in
+    * ConnectedComponentsSpec take up to ~30 rounds), so `maxIters`
+    * bounds diameter, not log diameter. Each seed task holds a
+    * `LongMap` of O(distinct endpoints in one edge partition) — the
+    * same rows the task already streams, so spark.sql.shuffle.partitions
+    * bounds it like any aggregation's hash map.
+    *
+    * `checkpointDir`: when set, every materialization (edges, seed,
+    * rounds) is a RELIABLE checkpoint into that directory
+    * (HDFS/object store on a cluster) instead of `localCheckpoint` —
+    * localCheckpoint blocks live on executors and die with them, so a
+    * multi-hour 100 TB CC job would be killed by its first lost
+    * executor; the reliable path re-reads the checkpoint files instead.
+    * Identical results (spec-asserted); the local default stays the
+    * fast single-process choice. */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
                           maxIters: Int = 50,
                           checkpointDir: Option[String] = None): DataFrame =
     ccWithRounds(vertices, pairs, maxIters, checkpointDir)._1
 
+  /** The local seed of [[connectedComponents]]: union-find over one
+    * partition's edges (union by minimum, so every root is its set's
+    * least id; path compression keeps finds near O(1) amortized).
+    * Emits (v, min id of v's local component) once per distinct
+    * endpoint. The output SET depends only on the edge set, never on
+    * edge order; row order follows the map and is not part of the
+    * contract. */
+  private[graft] def localMinLabels(edges: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(v: Long): Long = {
+      var root = v
+      var up = parent.getOrElseUpdate(v, v)
+      while (up != root) { root = up; up = parent(root) }
+      var cur = v
+      while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // keys copied first: find() compresses paths, writing into the map
+    parent.keys.toArray.iterator.map(v => (v, find(v)))
+  }
+
   /** [[connectedComponents]] + the number of propagation rounds it took
-    * (the last round is the no-change fixpoint probe) — exposed so the
-    * O(log diameter) pointer-jumping guarantee is spec-testable. */
+    * after the local seed (the last round is the no-change fixpoint
+    * probe) — exposed so the round bound on an ordered chain is
+    * spec-testable. */
   private[graft] def ccWithRounds(vertices: DataFrame, pairs: DataFrame,
                                   maxIters: Int,
                                   checkpointDir: Option[String] = None)
       : (DataFrame, Int) = {
+    val spark = vertices.sparkSession
+    import spark.implicits._
     // Eager checkpointing everywhere, NOT cache: caching truncates
     // re-execution but keeps the logical plan, so an iterate-to-fixpoint
     // loop builds a plan that doubles in depth per round and kills the
@@ -895,17 +959,10 @@ object DedupOps {
     // algorithms. Local by default (fast, blocks on executors); with
     // `checkpointDir` set the blocks go to reliable storage and the job
     // survives executor loss.
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
+    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def mat(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    val dbg = sys.env.contains("GRAFT_DEBUG_CLUSTERS")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"  [clusters] $tag: ${(now - t0) / 1e9}%.3f s")
-      t0 = now
-    }
     // the symmetric edge closure in ONE materialization (round 21; was
     // two — a pairs checkpoint, then a union of two branches over it into
     // a second checkpoint): exploding each pair into its two directions
@@ -920,14 +977,15 @@ object DedupOps {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst")))
-    lap("pair edges")
     // Iterate ONLY over edge-touched vertices: a near-dup graph is sparse
     // — the overwhelming share of a real corpus has no candidate pair at
     // all and is trivially its own singleton cluster. Keeping isolated
     // vertices out of the loop shrinks every round's joins, checkpoints,
     // and convergence counts from O(corpus) to O(touched vertices); the
     // singletons re-enter once, join-free, after the fixpoint.
-    val touched = edges.select(col("src").as("doc_id")).distinct()
+    // Round 0 is the local union-find seed (see [[connectedComponents]]):
+    // its per-vertex min is also the touched-vertex set, keyed on doc_id
+    // like every round's labels.
     // `chg` = did this label move LAST round (round 20): a vertex's
     // neighbor-min can only decrease when a neighbor's label decreased
     // in the previous round, so the neighbor-min join needs only the
@@ -937,12 +995,13 @@ object DedupOps {
     // edge (u,v) has seen u's final label by the fixpoint — the result
     // is bit-identical (oracle-replayed), only the per-round label
     // shuffle shrinks from O(vertices) to O(frontier). Round 1 starts
-    // all-true (everyone just "changed" to their own id).
-    var labels = mat(touched.select(col("doc_id"),
-      col("doc_id").as("cluster_id"),
-      col("doc_id").as("prev"),
-      lit(true).as("chg")))
-    lap("touched vertices")
+    // all-true (every seed label is new).
+    val seeded = mat(edges.as[(Long, Long)].mapPartitions(localMinLabels)
+      .toDF("doc_id", "seed")
+      .groupBy(col("doc_id"))
+      .agg(min(col("seed")).as("cluster_id")))
+    var labels = seeded.select(col("doc_id"), col("cluster_id"),
+      col("cluster_id").as("prev"), lit(true).as("chg"))
 
     // One propagation step: neighbor-min, then pointer jump (follow the
     // label's label). Plain neighbor-min needs O(path length) rounds on
@@ -1001,16 +1060,21 @@ object DedupOps {
       val obs = org.apache.spark.sql.Observation()
       val next = mat(step(labels).repartition(col("doc_id"))
         .observe(obs,
-          count(when(col("cluster_id") < col("prev"), 1)).as("changed")))
+          count(when(col("cluster_id") < col("prev"), 1)).as("changed"),
+          count(lit(1)).as("rows")))
       changed = obs.get("changed").asInstanceOf[Long]
+      // the checkpoint's size estimate is the product over this round's
+      // self-joins, so it would square every round; the observed row
+      // count replaces it (see GraftPlanBridge)
+      val sized = org.apache.spark.sql.GraftPlanBridge.withRowCount(next,
+        obs.get("rows").asInstanceOf[Long])
       // prev resets to the new label for the next convergence compare;
       // chg records whether THIS round moved it (the next round's
       // frontier) — both are narrow reads of the checkpoint, no recompute
-      labels = next.select(col("doc_id"), col("cluster_id"),
+      labels = sized.select(col("doc_id"), col("cluster_id"),
         col("cluster_id").as("prev"),
         (col("cluster_id") < col("prev")).as("chg"))
       iter += 1
-      lap(s"round $iter (changed=$changed)")
     }
     // a non-converged result is WRONG (labels are not component minima,
     // pairs may split across clusters) — fail loudly, never return it
@@ -1018,7 +1082,7 @@ object DedupOps {
       s"connectedComponents did not converge within $maxIters rounds " +
         s"($changed labels still changing) — raise maxIters")
     val isolated = vertices
-      .join(touched, Seq("doc_id"), "left_anti")
+      .join(seeded.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
     (labels.select(col("doc_id"), col("cluster_id")).union(isolated), iter)
   }

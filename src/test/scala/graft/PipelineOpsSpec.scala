@@ -375,13 +375,17 @@ class PipelineOpsSpec extends SparkSpec {
     // (the checkpointed label frame carries accurate stats, so the
     // planner broadcasts it), which is why the assertions key on stage
     // NAMES — the action call sites — not raw job totals.
+    // 16 shuffle partitions split the chain's edges, so the local
+    // union-find seed leaves real rounds for the loop to run.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setJobGroup(group, "cc job fold spec")
-    val rounds = try {
-      DedupOps.ccWithRounds(verts, pairs, maxIters = 50)._2
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val rounds = withSplitEdges {
+      try {
+        DedupOps.ccWithRounds(verts, pairs, maxIters = 50)._2
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
     Thread.sleep(2000) // listener bus is async
     spark.sparkContext.removeSparkListener(listener)
@@ -389,10 +393,10 @@ class PipelineOpsSpec extends SparkSpec {
     val actions = jobStages.asScala.toSeq.map(_.headOption.getOrElse(""))
     val checkpoints = actions.count(_.toLowerCase.contains("checkpoint"))
     val counts = actions.count(_.startsWith("count at"))
-    // 2 one-off materializations (exploded symmetric edges, initial
-    // labels — round 21 fused the former pairs+edges pair of checkpoints
-    // into one) + ONE checkpoint action per round, which carries the
-    // observe() metrics the loop reads `changed` from — and NO count()
+    assert(rounds >= 2, s"$rounds rounds — the seed closed the chain, so no round was counted")
+    // 2 one-off materializations (exploded symmetric edges, the local
+    // union-find seed labels) + ONE checkpoint action per round, which
+    // carries the observe() metrics the loop reads `changed` from — and NO count()
     // action anywhere: a reintroduced per-round convergence count would
     // show up as `rounds` "count at" jobs.
     assert(checkpoints == 2 + rounds,
@@ -647,9 +651,14 @@ class PipelineOpsSpec extends SparkSpec {
     val diameter = 32
     val verts = (0L to diameter.toLong).toDF("doc_id")
     val pairs = (0L until diameter.toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // edges split over 16 partitions: the local seed contracts the chain
+    // but cannot close it, so pointer jumping and the frontier still run
+    val (got, rounds) = withSplitEdges {
+      val (labels, rounds) = DedupOps.ccWithRounds(verts, pairs, maxIters = 50)
+      (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
     assert(got.size == diameter + 1 && got.values.forall(_ == 0L), got)
+    assert(rounds >= 2, s"$rounds rounds — the seed closed the chain, the loop went untested")
     // log2(32) = 5 propagation-doubling rounds, +1 fixpoint probe, +2
     // slack for the off-by-one of combined hop+jump distance growth
     val bound = (math.log(diameter) / math.log(2)).ceil.toInt + 3
