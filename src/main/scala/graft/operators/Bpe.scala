@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Trained byte-pair-encoding tokenizer — the piece that turns every
   * token-denominated operator in the corpus estate ([[CorpusOps.pack]],
@@ -25,11 +26,10 @@ import org.apache.spark.sql.functions._
   * freq) table; at 100 TB that's millions of rows, not the corpus).
   * Every merge round then runs on the vocab frame alone — a pair
   * explode + partial agg + 1-row argmax + broadcast replace — with the
-  * per-round result eagerly checkpointed ([[AnnOps.kmeans]]'s
-  * iterate-with-checkpoint lesson: cut lineage each round or round R
-  * replays rounds 1..R−1). Encoding is a pure row-level fold with the
-  * merge table broadcast — no join, no shuffle, the shape that encodes
-  * 100 TB as a map-only pass.
+  * per-round result eagerly checkpointed ([[Checkpoints]]: cut lineage
+  * each round or round R replays rounds 1..R−1). Encoding is a pure
+  * row-level fold with the merge table broadcast — no join, no shuffle,
+  * the shape that encodes 100 TB as a map-only pass.
   *
   * Exactness contract (the DuckDB-replayable part): symbol sequences
   * are strings with `chr(1)` sentinels — each token wrapped `·tok·`, so
@@ -88,28 +88,24 @@ object BpeOps {
       .groupBy("lhs", "rhs")
       .agg(sum(col("freq")).as("cnt"))
 
-  /** Materialization for the merge loop — localCheckpoint by default,
-    * reliable checkpoints under `checkpointDir` on a cluster (the
-    * [[AnnOps]] durability option: a multi-hour 100 TB training must
-    * survive a lost executor). */
-  private def mat(checkpointDir: Option[String])(df: DataFrame): DataFrame = {
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
-    if (checkpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-  }
+  /** The merge table's columns, in order. */
+  private val MergeTableSchema = StructType(Seq(
+    StructField("merge_rank", IntegerType, nullable = false),
+    StructField("lhs", StringType),
+    StructField("rhs", StringType),
+    StructField("merged", StringType),
+    StructField("cnt", LongType)))
 
   /** §2-97 `q_bpe_train`: learn the merge table — (merge_rank, lhs,
     * rhs, merged, cnt), rank in learning order, cnt the exact weighted
     * pair count that won the round (ties: smallest (lhs, rhs)). */
-  def train(documents: DataFrame, merges: Int = Merges,
-            checkpointDir: Option[String] = None): DataFrame =
-    trainPieces(documents, merges, checkpointDir)._1
+  def train(documents: DataFrame, merges: Int = Merges): DataFrame =
+    trainPieces(documents, merges)._1
 
   /** (merge table, final vocab (word, freq, seq)) — the vocab lets a
     * spec assert the row-level encoder reproduces the training
     * trajectory word-for-word. */
-  private[graft] def trainPieces(documents: DataFrame, merges: Int = Merges,
-                                 checkpointDir: Option[String] = None)
+  private[graft] def trainPieces(documents: DataFrame, merges: Int = Merges)
       : (DataFrame, DataFrame) = {
     // the [1, 64] cap is the ORACLE's (it unrolls one CTE per round —
     // enforced in oracleCtes); training itself runs any merge count: a
@@ -119,9 +115,9 @@ object BpeOps {
       .select(explode(expr(WordsExpr)).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("freq"))
-    var vocab = mat(checkpointDir)(
-      freq.withColumn("seq", expr(seq0("word"))))
-    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var vocab = Checkpoints.materialize(
+      freq.withColumn("seq", expr(seq0("word"))), eager = true)
+    val winners = scala.collection.mutable.ArrayBuffer.empty[Row]
     var saturated = false
     var i = 1
     while (i <= merges && !saturated) {
@@ -141,37 +137,35 @@ object BpeOps {
       //    UNCHANGED instead of being emptied by the old crossJoin;
       //    the saturation signal itself rides the checkpoint job as an
       //    observe() metric (count of non-null lhs), not its own action;
-      //  - the winning row is re-read from the checkpoint (every vocab
-      //    row carries it) instead of being its own materialization.
+      //  - the winning row rides the same observe() to the driver (every
+      //    vocab row with a non-null lhs carries it, so their max IS
+      //    it), so no round's checkpoint stays referenced once the next
+      //    round has read it.
       // Results are bit-identical: same deterministic winner, same merge
       // application, same honest end of the merge table at saturation.
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(checkpointDir)(
+      val next = Checkpoints.materialize(
         vocab.join(broadcast(best), lit(true), "left")
           .withColumn("seq", when(col("lhs").isNull, col("seq"))
             .otherwise(expr(mergeStep("seq", "lhs", "rhs"))))
-          .observe(obs, count(col("lhs")).as("n_win")))
-      saturated = obs.get("n_win").asInstanceOf[Long] == 0L
+          .observe(obs, count(col("lhs")).as("n_win"),
+            max(when(col("lhs").isNotNull, struct(col("merge_rank"),
+              col("lhs"), col("rhs"), col("merged"), col("cnt")))).as("win")),
+        eager = true)
+      val metrics = obs.get
+      saturated = metrics("n_win").asInstanceOf[Long] == 0L
       vocab = next.select(col("word"), col("freq"), col("seq"))
       if (!saturated) {
-        bests += next
-          .filter(col("lhs").isNotNull).limit(1)
-          .select(col("merge_rank"), col("lhs"), col("rhs"),
-            col("merged"), col("cnt"))
+        winners += metrics("win").asInstanceOf[Row]
         i += 1
       }
     }
-    // a same-schema empty seed keeps the reduce total when saturation
-    // hits on round 1 (every word already a single symbol — e.g. a
-    // one-char-word corpus): the merge table is honestly empty. The
-    // seed is the ROUND PROJECTION over a limit(0) source, so its
-    // schema tracks the per-round select by construction (the
-    // positional union can never drift), and OptimizeLimitZero folds
-    // it to an empty relation at planning — no runtime cost
-    val zero = pairCounts(vocab).limit(0)
-      .select(lit(0).as("merge_rank"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("cnt"))
-    ((zero +: bests.toSeq).reduce(_.union(_)).orderBy("merge_rank"), vocab)
+    // one local relation, in rank order; empty when saturation hits on
+    // round 1 (every word already a single symbol — e.g. a one-char-word
+    // corpus): the merge table is then honestly empty
+    import scala.jdk.CollectionConverters._
+    (documents.sparkSession.createDataFrame(winners.asJava, MergeTableSchema),
+      vocab)
   }
 
   /** The merge table collapsed to ONE row carrying the rank-ordered
@@ -279,9 +273,8 @@ object BpeOps {
 
   /** Train on `documents` and persist in one step. */
   def trainTokenizer(documents: DataFrame, path: String,
-                     merges: Int = Merges,
-                     checkpointDir: Option[String] = None): Unit = {
-    val (mt, vocab) = trainPieces(documents, merges, checkpointDir)
+                     merges: Int = Merges): Unit = {
+    val (mt, vocab) = trainPieces(documents, merges)
     writeTokenizer(mt, vocab, path)
   }
 

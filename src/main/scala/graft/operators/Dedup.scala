@@ -695,7 +695,7 @@ object DedupOps {
     // (df ≤ cap survived the filter), so the non-owner docs come from
     // exploding `ds` — never from a join back to the fingerprint
     // stream, which would re-run the whole corpus scan + hash pass
-    // (recompute-per-branch; PlanProbe: 3 → 2 documents scans)
+    // (recompute-per-branch; PlanDump tally: 3 → 2 documents scans)
     fps
       .groupBy(col("f"))
       .agg(call_function("collect_set_capped", col("doc_id"), lit(dfCap))
@@ -796,10 +796,9 @@ object DedupOps {
     * (clusters-over-the-wide-graph spec'd on planted near-dups in
     * PipelineOpsSpec). */
   def dedupClusters(documents: DataFrame, maxIters: Int = 50,
-                    checkpointDir: Option[String] = None,
                     k: Int = MinhashK, bands: Int = Bands): DataFrame =
     connectedComponents(documents.select(col("doc_id")),
-      minhashPairs(documents, k, bands), maxIters, checkpointDir)
+      minhashPairs(documents, k, bands), maxIters)
       .orderBy("doc_id")
 
   /** §2-117 `q_dup_inflation`: the DUPLICATION PROFILE — cluster-size
@@ -814,10 +813,9 @@ object DedupOps {
     * histogram is two tiny re-aggs over the CC output (cluster sizes →
     * size counts), both key-bounded; the corpus share is one broadcast
     * total. */
-  def dupInflation(documents: DataFrame, maxIters: Int = 50,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def dupInflation(documents: DataFrame, maxIters: Int = 50): DataFrame = {
     val clusters = connectedComponents(documents.select(col("doc_id")),
-      minhashPairs(documents, MinhashK, Bands), maxIters, checkpointDir)
+      minhashPairs(documents, MinhashK, Bands), maxIters)
     val sizes = clusters.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     val total = sizes.agg(sum(col("cluster_size")).as("n_total"))
@@ -850,9 +848,8 @@ object DedupOps {
     * representative, so the output is exactly the post-dedup corpus
     * manifest. */
   def dedupRepresentative(documents: DataFrame, maxIters: Int = 50,
-                          checkpointDir: Option[String] = None,
                           k: Int = MinhashK, bands: Int = Bands): DataFrame =
-    dedupClusters(documents, maxIters, checkpointDir, k, bands)
+    dedupClusters(documents, maxIters, k, bands)
       .join(documents.select(col("doc_id"),
         TextOps.qualityScore(col("text")).as("q")), "doc_id")
       .groupBy("cluster_id")
@@ -901,18 +898,10 @@ object DedupOps {
     * same rows the task already streams, so spark.sql.shuffle.partitions
     * bounds it like any aggregation's hash map.
     *
-    * `checkpointDir`: when set, every materialization (edges, seed,
-    * rounds) is a RELIABLE checkpoint into that directory
-    * (HDFS/object store on a cluster) instead of `localCheckpoint` —
-    * localCheckpoint blocks live on executors and die with them, so a
-    * multi-hour 100 TB CC job would be killed by its first lost
-    * executor; the reliable path re-reads the checkpoint files instead.
-    * Identical results (spec-asserted); the local default stays the
-    * fast single-process choice. */
+    * Every materialization (edges, seed, rounds) follows [[Checkpoints]]. */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
-                          maxIters: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame =
-    ccWithRounds(vertices, pairs, maxIters, checkpointDir)._1
+                          maxIters: Int = 50): DataFrame =
+    ccWithRounds(vertices, pairs, maxIters)._1
 
   /** The local seed of [[connectedComponents]]: union-find over one
     * partition's edges (union by minimum, so every root is its set's
@@ -946,24 +935,12 @@ object DedupOps {
     * probe) — exposed so the round bound on an ordered chain is
     * spec-testable. */
   private[graft] def ccWithRounds(vertices: DataFrame, pairs: DataFrame,
-                                  maxIters: Int,
-                                  checkpointDir: Option[String] = None)
-      : (DataFrame, Int) = {
+                                  maxIters: Int): (DataFrame, Int) = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    // Eager checkpointing everywhere, NOT cache: caching truncates
-    // re-execution but keeps the logical plan, so an iterate-to-fixpoint
-    // loop builds a plan that doubles in depth per round and kills the
-    // driver (plan-string generation alone OOMs). Checkpointing cuts the
-    // lineage each round — the standard move for iterative graph
-    // algorithms. Local by default (fast, blocks on executors); with
-    // `checkpointDir` set the blocks go to reliable storage and the job
-    // survives executor loss.
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def mat(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    // the symmetric edge closure in ONE materialization (round 21; was
+    // eager checkpoints, not cache: see Checkpoints for why every round
+    // cuts its lineage.
+    // The symmetric edge closure in ONE materialization (round 21; was
     // two — a pairs checkpoint, then a union of two branches over it into
     // a second checkpoint): exploding each pair into its two directions
     // is row-level, so the pair subtree runs exactly once and one whole
@@ -971,12 +948,12 @@ object DedupOps {
     // Pre-partitioned by the per-round join key ONCE — checkpointing
     // preserves outputPartitioning, so every round's edges⋈labels join
     // shuffles only the label side, never the edges.
-    val edges = mat(pairs
+    val edges = Checkpoints.materialize(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst")))
+      .repartition(col("dst")), eager = true)
     // Iterate ONLY over edge-touched vertices: a near-dup graph is sparse
     // — the overwhelming share of a real corpus has no candidate pair at
     // all and is trivially its own singleton cluster. Keeping isolated
@@ -996,10 +973,11 @@ object DedupOps {
     // is bit-identical (oracle-replayed), only the per-round label
     // shuffle shrinks from O(vertices) to O(frontier). Round 1 starts
     // all-true (every seed label is new).
-    val seeded = mat(edges.as[(Long, Long)].mapPartitions(localMinLabels)
-      .toDF("doc_id", "seed")
-      .groupBy(col("doc_id"))
-      .agg(min(col("seed")).as("cluster_id")))
+    val seeded = Checkpoints.materialize(
+      edges.as[(Long, Long)].mapPartitions(localMinLabels)
+        .toDF("doc_id", "seed")
+        .groupBy(col("doc_id"))
+        .agg(min(col("seed")).as("cluster_id")), eager = true)
     var labels = seeded.select(col("doc_id"), col("cluster_id"),
       col("cluster_id").as("prev"), lit(true).as("chg"))
 
@@ -1058,10 +1036,11 @@ object DedupOps {
       // OVER-count `changed`; the loop tests it against zero, so an
       // over-count never converges early.
       val obs = org.apache.spark.sql.Observation()
-      val next = mat(step(labels).repartition(col("doc_id"))
+      val next = Checkpoints.materialize(step(labels)
+        .repartition(col("doc_id"))
         .observe(obs,
           count(when(col("cluster_id") < col("prev"), 1)).as("changed"),
-          count(lit(1)).as("rows")))
+          count(lit(1)).as("rows")), eager = true)
       changed = obs.get("changed").asInstanceOf[Long]
       // the checkpoint's size estimate is the product over this round's
       // self-joins, so it would square every round; the observed row
@@ -1142,10 +1121,6 @@ object DedupOps {
     for (phase <- Seq(0, EmbBandBits / 2); b <- 0 until EmbDims / EmbBandBits)
       yield (0 until EmbBandBits).map(i => (phase + b * EmbBandBits + i) % EmbDims)
 
-  /** Distinct LSH candidate pairs (pre-cosine-verify) — the blocks frame
-    * carries ONLY (vec_id, band, key): the 64-float payload never rides
-    * the exploded band stream or its shuffle; exposed for the
-    * candidate-volume spec. */
   /** The (vec_id, band, key) tiled-sign band stream — exposed so
     * PlanAuditSpec can assert the payload-free Generate on the frame
     * that actually executes (the candidates join checkpoints it, which
@@ -1159,31 +1134,31 @@ object DedupOps {
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
+  /** Distinct LSH candidate pairs (pre-cosine-verify) — the blocks frame
+    * carries ONLY (vec_id, band, key): the 64-float payload never rides
+    * the exploded band stream or its shuffle; exposed for the
+    * candidate-volume spec. */
   private[graft] def embeddingLshCandidates(embeddings: DataFrame): DataFrame =
     // NO checkpoint: the tiled sign keys are cheap column slices —
     // recompute ≈ free (the minhash k<16 case), so lineage stays whole
     // for nothing.
-    bandSelfJoin(embeddingLshBlocks(embeddings), checkpoint = false)
+    bandSelfJoin(embeddingLshBlocks(embeddings))
 
   /** Self-join a (vec_id, band, key) block stream into distinct ordered
-    * candidate pairs. With `checkpoint` the lazy localCheckpoint
-    * materializes the band keys once — AQE does not dedupe the two
-    * identical self-join subtrees, so an expensive key map (the rp
-    * scheme's 128×64 integer dots) is otherwise computed twice
-    * (measured on the MinHash twin of this shape). Cheap key maps
-    * should pass false: recompute costs less than the block-cache round
-    * trip, and lineage stays intact for fault recovery. */
-  private def bandSelfJoin(blockStream: DataFrame,
-                           checkpoint: Boolean): DataFrame = {
-    val blocks =
-      if (checkpoint) blockStream.localCheckpoint(false) else blockStream
+    * candidate pairs. AQE does not dedupe the two identical self-join
+    * subtrees, so a caller with an expensive key map (the rp scheme's
+    * 128×64 integer dots) materializes the stream first, or the keys are
+    * computed twice (measured on the MinHash twin of this shape). Cheap
+    * key maps pass the stream as is: recompute costs less than the
+    * block-cache round trip, and lineage stays intact for fault
+    * recovery. */
+  private def bandSelfJoin(blocks: DataFrame): DataFrame =
     blocks.as("a")
       .join(blocks.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
-  }
 
   /** §2-59 `q_dedup_embedding_lsh`: cosine near-dup pairs (cos ≥ τ) with
     * NO label/metadata requirement — the general-corpus embedding dedup.
@@ -1245,11 +1220,6 @@ object DedupOps {
       embeddingRpCandidates(embeddings, bands, bitsPerBand), tau)
       .orderBy("vec_a", "vec_b")
 
-  /** Distinct random-hyperplane candidate pairs (pre-cosine-verify) —
-    * like [[embeddingLshCandidates]], the band stream carries ONLY
-    * (vec_id, band, key); the native `rp_band_keys` computes all 16 keys
-    * in one primitive-loop pass and `posexplode` supplies the band index.
-    * Exposed for the recall spec. */
   /** The (vec_id, band, key) random-hyperplane band stream (see
     * [[embeddingLshBlocks]] for why it is exposed). The (bands, bits)
     * geometry is THE corpus-size knob: band collisions scale
@@ -1270,18 +1240,19 @@ object DedupOps {
           .as(Seq("band", "key")))
   }
 
-  /** `checkpoint = false` is for consumers that re-materialize the pair
-    * stream through a RELIABLE checkpoint ([[dedupEmbeddingClusters]]):
-    * a lazily localCheckpointed subtree truncates lineage, so an
-    * executor lost during that materialization could not recompute its
-    * blocks — the executor-loss safety the checkpointDir option exists
-    * for would be silently void. */
+  /** Distinct random-hyperplane candidate pairs (pre-cosine-verify) —
+    * like [[embeddingLshCandidates]], the band stream carries ONLY
+    * (vec_id, band, key); the native `rp_band_keys` computes all 16 keys
+    * in one primitive-loop pass and `posexplode` supplies the band index.
+    * The stream is lazily materialized ([[Checkpoints]]) before the
+    * self-join, so its keys are computed once. Exposed for the recall
+    * spec. */
   private[graft] def embeddingRpCandidates(embeddings: DataFrame,
                                            bands: Int = graft.plans.RpLsh.Bands,
-                                           bits: Int = graft.plans.RpLsh.BitsPerBand,
-                                           checkpoint: Boolean = true)
+                                           bits: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
-    bandSelfJoin(embeddingRpBlocks(embeddings, bands, bits), checkpoint)
+    bandSelfJoin(Checkpoints.materialize(
+      embeddingRpBlocks(embeddings, bands, bits), eager = false))
 
   /** §2-73 `q_dedup_embedding_incremental`: incremental (delta-vs-corpus)
     * EMBEDDING dedup — the rp-LSH twin of [[dedupIncremental]],
@@ -1334,25 +1305,17 @@ object DedupOps {
     * closure with a recursive CTE over the same band-key pair universe. */
   def dedupEmbeddingClusters(embeddings: DataFrame, tau: Double = 0.4,
                              maxIters: Int = 50,
-                             checkpointDir: Option[String] = None,
                              bands: Int = graft.plans.RpLsh.Bands,
                              bitsPerBand: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame =
     connectedComponents(
       embeddings.select(col("vec_id").as("doc_id")),
       // the rp pair graph (hard recall floor + the (bands, bits)
-      // corpus-size knob — SURVEY §8), NOT the fixed-width tiled one.
-      // Block-stream checkpointing follows the CC durability mode: on
-      // the reliable path a localCheckpointed subtree would truncate
-      // lineage and void executor-loss recovery (see
-      // embeddingRpCandidates); on the local path lineage is truncated
-      // by mat() regardless, so the checkpoint just saves computing the
-      // rp keys once per self-join side.
+      // corpus-size knob — SURVEY §8), NOT the fixed-width tiled one
       cosineVerifiedPairs(embeddings,
-        embeddingRpCandidates(embeddings, bands, bitsPerBand,
-          checkpoint = checkpointDir.isEmpty), tau)
+        embeddingRpCandidates(embeddings, bands, bitsPerBand), tau)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
-      maxIters, checkpointDir)
+      maxIters)
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
       .orderBy("vec_id")
 
@@ -1384,12 +1347,11 @@ object DedupOps {
     * localCheckpointed once (the AQE no-subtree-dedup lesson). */
   def dedupEmbeddingRepresentative(embeddings: DataFrame, tau: Double = 0.4,
                                    maxIters: Int = 50,
-                                   checkpointDir: Option[String] = None,
                                    bands: Int = graft.plans.RpLsh.Bands,
                                    bitsPerBand: Int = graft.plans.RpLsh.BitsPerBand)
       : DataFrame = {
     val clusters = dedupEmbeddingClusters(embeddings, tau, maxIters,
-      checkpointDir, bands, bitsPerBand)
+      bands, bitsPerBand)
     val members = clusters
       .join(AnnOps.q6GuardedRaw(embeddings), "vec_id")
       .localCheckpoint(false)

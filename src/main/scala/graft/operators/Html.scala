@@ -1762,9 +1762,6 @@ object HtmlOps {
     * drops out, the decode gate), aHash clusters keep the
     * best-captioned representative with (n_pairs, n_pages, n_urls)
     * accounting. */
-  def mediaDatasetOf(pages: DataFrame, payloads: DataFrame): DataFrame =
-    mediaDatasetFromPairs(mediaPairsOf(pages), payloads)
-
   private def mediaDatasetFromPairs(pairs: DataFrame,
                                     payloads: DataFrame): DataFrame = {
     val snd = payloads.select(col("media_url"), col("payload"))

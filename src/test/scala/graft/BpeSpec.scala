@@ -202,6 +202,28 @@ class BpeSpec extends SparkSpec {
     assert(enc.values.toSeq.sorted == Seq(1L, 2L), enc)
   }
 
+  test("reliable-checkpoint path trains the same merge table and vocab") {
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_ckpt").toString
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    def trained(): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+      val (mt, vocab) = BpeOps.trainPieces(docs, merges = 8)
+      assert(mt.schema.map(f => f.name -> f.dataType) == Seq(
+        "merge_rank" -> IntegerType, "lhs" -> StringType,
+        "rhs" -> StringType, "merged" -> StringType, "cnt" -> LongType))
+      (rows(mt), rows(vocab.orderBy("word")))
+    }
+    val prior = spark.sparkContext.getCheckpointDir
+    val local = trained()
+    val reliable = withCheckpointDir(dir)(trained())
+    assert(spark.sparkContext.getCheckpointDir == prior)
+    assert(local._1.length == 8)
+    assert(reliable == local)
+    // the rounds really went through reliable storage
+    val files = new java.io.File(dir).listFiles
+    assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
+  }
+
   test("persisted tokenizer artifact round-trips bit-equal to the inline encode") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tokenizer")
       .toFile.getAbsolutePath

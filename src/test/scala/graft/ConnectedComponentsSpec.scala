@@ -105,10 +105,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_prop").toString
     val (vs, ps) = randomGraph(11L)
     val (v, p) = frames(vs, ps)
+    val prior = spark.sparkContext.getCheckpointDir
     val (local, reliable) = withSplitEdges {
       (labels(DedupOps.connectedComponents(v, p)),
-        labels(DedupOps.connectedComponents(v, p, checkpointDir = Some(dir))))
+        withCheckpointDir(dir)(labels(DedupOps.connectedComponents(v, p))))
     }
+    assert(spark.sparkContext.getCheckpointDir == prior)
     assert(reliable == local)
     assert(local == reference(vs, ps))
   }

@@ -320,31 +320,33 @@ class PipelineOpsSpec extends SparkSpec {
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val localDocs = collect(DedupOps.dedupClusters(docs))
-    val reliableDocs = collect(DedupOps.dedupClusters(docs,
-      checkpointDir = Some(dir)))
+    val reliableDocs =
+      withCheckpointDir(dir)(collect(DedupOps.dedupClusters(docs)))
     assert(reliableDocs == localDocs)
     val localEmb = collect(DedupOps.dedupEmbeddingClusters(embs))
-    val reliableEmb = collect(DedupOps.dedupEmbeddingClusters(embs,
-      checkpointDir = Some(dir)))
+    val reliableEmb =
+      withCheckpointDir(dir)(collect(DedupOps.dedupEmbeddingClusters(embs)))
     assert(reliableEmb == localEmb)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     // the rounds really went through reliable storage
     val files = new java.io.File(dir).listFiles
     assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
   }
 
   test("kmeans/pq fits: reliable-checkpoint path matches the local path") {
-    // same durability option as CC: per-round localCheckpoint blocks die
+    // same checkpoint policy as CC: per-round localCheckpoint blocks die
     // with their executor, so a multi-hour 100 TB training needs the
     // reliable path; the trajectory must be bit-identical through both
     val dir = java.nio.file.Files.createTempDirectory("graft_fit_ckpt").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    assert(rows(AnnOps.kmeans(embs, checkpointDir = Some(dir))) ==
+    assert(withCheckpointDir(dir)(rows(AnnOps.kmeans(embs))) ==
       rows(AnnOps.kmeans(embs)))
-    assert(rows(AnnOps.pqEncode(embs, checkpointDir = Some(dir))) ==
+    assert(withCheckpointDir(dir)(rows(AnnOps.pqEncode(embs))) ==
       rows(AnnOps.pqEncode(embs)))
-    assert(rows(AnnOps.pqSearchIvf(embs, checkpointDir = Some(dir))) ==
+    assert(withCheckpointDir(dir)(rows(AnnOps.pqSearchIvf(embs))) ==
       rows(AnnOps.pqSearchIvf(embs)))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val files = new java.io.File(dir).listFiles
     assert(files != null && files.nonEmpty, s"no checkpoint data under $dir")
   }

@@ -62,6 +62,20 @@ class PlanAuditSpec extends SparkSpec {
       s"spread must be a no-op on a multi-split scan:\n$pMulti")
   }
 
+  test("Tables.scanSplitCount divides by spark.sql.files.minPartitionNum like the scan does") {
+    // a small open cost makes the divisor decide the split size, so an
+    // estimate that divided by the core count instead would be off
+    withConfs("spark.sql.files.openCostInBytes" -> "1024") {
+      for (n <- Seq(1, 16)) withConfs("spark.sql.files.minPartitionNum" -> n.toString) {
+        val docs = Tables.documents(spark, sfDir)
+        val actual = docs.rdd.getNumPartitions.toLong
+        val estimate = Tables.scanSplitCount(docs.select(col("doc_id")))
+        assert(estimate.contains(actual),
+          s"minPartitionNum=$n: estimate $estimate, scan has $actual splits")
+      }
+    }
+  }
+
   test("q_event_scan: equality AND time-range predicates reach the parquet scan") {
     val p = plan(EventOps.eventScan(Tables.events(spark, sfDir)))
     assert(p.contains("PushedFilters"))
